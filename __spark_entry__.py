@@ -211,8 +211,9 @@ def _chain_closure_all_path(spark: "SparkSession", sf_dir: str) -> "DataFrame":
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: events-derived transcripts -> mention detection ->
-    entity linking -> JSON-LD expansion -> node map -> toRdf ->
-    canonicalized, deduplicated triple set."""
+    entity linking -> the per-turn JSON-LD payload's toRdf quads
+    (compiled to column expressions) -> canonicalized, deduplicated
+    triple set."""
     from jsonld_spark.operators.kg_pipeline import kg_triples
 
     return kg_triples(spark, "/root/testdata/sf0.001")
@@ -244,14 +245,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def _n_turns(spark, sf):
         # parquet-footer count (metadata-only job) sizes the CPU stage
-        # without an extra pass over the derived transcript stream —
-        # same policy as kg_triples (VERDICT r2 #5)
+        # without an extra pass over the derived transcript stream
+        # (VERDICT r2 #5)
         from jsonld_spark.plans.session import read_table
 
         return read_table(spark, sf, "events").count()
 
     # several queries consume the pipeline output; cache it per
-    # (session, sf) so the driver's sweep runs the kernel stage once
+    # (session, sf) so a sweep over the registry builds the triples once
     cache: dict = {}
 
     def cached_triples(spark, sf):

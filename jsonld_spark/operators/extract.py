@@ -9,11 +9,18 @@ dictionary is small and static it is resolved once on the driver and
 shipped as a *literal map expression* (cheaper than a broadcast join:
 zero shuffle, zero build side). ``link_mentions_join`` provides the
 broadcast-join variant for dynamic dictionaries.
+
+The per-turn payload is described once, as field tables
+(``_turn_fields``/``_mention_fields``): ``with_payload`` serialises
+them to the JSON-LD document, and ``payload_quads`` compiles them to
+the quads toRdf emits for that document, so the two cannot drift.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from jsonld_spark.sources import entities as E
@@ -21,6 +28,10 @@ from jsonld_spark.sources import entities as E
 TURN_IRI_PREFIX = E.KG + "turn/"
 CONV_IRI_PREFIX = E.KG + "conv/"
 TOOL_IRI_PREFIX = E.KG + "tool/"
+
+RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
+XSD_INTEGER = "http://www.w3.org/2001/XMLSchema#integer"
 
 # The static context for per-turn payloads; resolved once on the driver
 # and shared with the expansion kernel stage (SURVEY.md §1.3: contexts
@@ -36,15 +47,19 @@ PIPELINE_CONTEXT = {
 
 
 def _link_map_expr():
-    """Literal MapType column: surface -> struct(entity_id, type_term, prior)."""
+    """Literal MapType column: surface -> struct(entity_id, type_term,
+    prior, prior_str), where prior_str is the prior's canonical
+    xsd:double lexical form."""
     entries = []
     for surface, row in sorted(E.resolved_link_map().items()):
+        index = int(row["entity_id"].rsplit("E", 1)[1])
         entries.append(F.lit(surface))
         entries.append(
             F.struct(
                 F.lit(row["entity_id"]).alias("entity_id"),
                 F.lit(row["type_term"]).alias("type_term"),
                 F.lit(float(row["prior"])).alias("prior"),
+                F.lit(E.entity_prior_str(index)).alias("prior_str"),
             )
         )
     return F.create_map(*entries)
@@ -123,46 +138,80 @@ def link_mentions_join_salted(mentions: DataFrame, dictionary: DataFrame,
                      buckets=buckets, how="left")
 
 
+class Field(NamedTuple):
+    """One field of the per-turn payload: its JSON key and value.
+
+    Its RDF object follows from PIPELINE_CONTEXT the way expansion and
+    toRdf derive it: ``@type`` values are vocabulary terms, keys the
+    context coerces to ``@id`` are IRIs, and other keys are literals
+    typed by the context or else by ``datatype`` (a native JSON string
+    is xsd:string, an integer xsd:integer). ``lexical`` overrides the
+    literal's string form where toRdf canonicalises it (xsd:double)."""
+
+    key: str
+    value: Column
+    datatype: str = XSD_STRING
+    lexical: Column | None = None
+
+
+def _turn_fields() -> list[Field]:
+    """The turn node's scalar fields, in document order after ``@id``."""
+    return [
+        Field("@type", F.lit("Turn")),
+        Field("atTime", F.date_format("ts", "yyyy-MM-dd HH:mm:ss")),
+        Field("inConversation", F.concat(F.lit(CONV_IRI_PREFIX), F.col("conv_id"))),
+        Field("role", F.col("role")),
+        Field("turnIndex", F.col("turn_idx"), XSD_INTEGER),
+        Field("text", F.col("text")),
+        Field("tool", F.concat(F.lit(TOOL_IRI_PREFIX), F.col("tool"))),
+    ]
+
+
+def _mention_fields(surface: Column, rank: Column, entity: Column) -> list[Field]:
+    """A mention node's fields, in document order; ``entity`` is the
+    surface's link-map entry."""
+    return [
+        Field("@type", F.lit("Mention")),
+        Field("rank", rank, XSD_INTEGER),
+        Field("surface", surface),
+        Field("score", entity["prior"], lexical=entity["prior_str"]),
+        Field("target", entity["entity_id"]),
+    ]
+
+
+def _turn_iri() -> Column:
+    return F.concat(F.lit(TURN_IRI_PREFIX), F.col("conv_id"), F.lit("/"), F.col("turn_idx"))
+
+
+def _surfaces() -> Column:
+    return F.regexp_extract_all("text", F.lit(E.surface_pattern()), 1)
+
+
 def with_payload(transcripts: DataFrame) -> DataFrame:
     """Attach turn/conv IRIs and the per-turn JSON-LD document.
 
     Output: transcripts columns + (turn_iri, jsonld string).
     """
     link = _link_map_expr()
-    turn_iri = F.concat(
-        F.lit(TURN_IRI_PREFIX), F.col("conv_id"), F.lit("/"), F.col("turn_idx")
-    )
-    conv_iri = F.concat(F.lit(CONV_IRI_PREFIX), F.col("conv_id"))
-    surfaces = F.regexp_extract_all("text", F.lit(E.surface_pattern()), 1)
+    turn_iri = _turn_iri()
+    surfaces = _surfaces()
+
+    def members(fields):
+        return [f.value.alias(f.key) for f in fields]
 
     mentions = F.transform(
-        surfaces,
-        lambda s, i: F.struct(
-            F.lit("Mention").alias("@type"),
-            i.alias("rank"),
-            s.alias("surface"),
-            F.element_at(link, s)["prior"].alias("score"),
-            F.element_at(link, s)["entity_id"].alias("target"),
-        ),
+        surfaces, lambda s, i: F.struct(*members(_mention_fields(s, i, F.element_at(link, s))))
     )
     # entity references only (coerced @id strings): corpus-level entity
     # facts (rdf:type / label) are emitted by entity_triples() as a
-    # small relational distinct, so the document-kernel output stays
-    # unique-by-construction and needs NO global dedup shuffle
+    # small relational distinct, so the per-turn quads stay
+    # unique-by-construction and need NO global dedup shuffle
     entity_refs = F.transform(surfaces, lambda s: F.element_at(link, s)["entity_id"])
 
     doc = F.to_json(
         F.struct(
             turn_iri.alias("@id"),
-            F.lit("Turn").alias("@type"),
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("atTime"),
-            conv_iri.alias("inConversation"),
-            F.col("role").alias("role"),
-            F.col("turn_idx").alias("turnIndex"),
-            F.col("text").alias("text"),
-            F.when(
-                F.col("tool").isNotNull(), F.concat(F.lit(TOOL_IRI_PREFIX), F.col("tool"))
-            ).alias("tool"),
+            *members(_turn_fields()),
             mentions.alias("mentions"),
             entity_refs.alias("entities"),
         )
@@ -170,8 +219,75 @@ def with_payload(transcripts: DataFrame) -> DataFrame:
     return transcripts.withColumn("turn_iri", turn_iri).withColumn("jsonld", doc)
 
 
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
+def _quad(subject, predicate: str, kind: str, value, datatype: str | None = None) -> Column:
+    null_s = F.lit(None).cast("string")
+    return F.struct(
+        null_s.alias("graph"),
+        subject.alias("subject"),
+        F.lit(predicate).alias("predicate"),
+        F.lit(kind).alias("obj_kind"),
+        value.cast("string").alias("obj_value"),
+        F.lit(datatype).cast("string").alias("obj_type"),
+        null_s.alias("obj_lang"),
+    )
+
+
+def _fact(subject: Column, field: Field) -> Column:
+    """The quad toRdf emits for one payload field of ``subject``."""
+    if field.key == "@type":
+        return _quad(subject, RDF_TYPE, "iri", F.concat(F.lit(E.VOCAB), field.value))
+    coerced = PIPELINE_CONTEXT.get(field.key, {}).get("@type")
+    if coerced == "@id":
+        return _quad(subject, E.VOCAB + field.key, "iri", field.value)
+    lexical = field.value if field.lexical is None else field.lexical
+    return _quad(subject, E.VOCAB + field.key, "literal", lexical, coerced or field.datatype)
+
+
+def payload_quads(transcripts: DataFrame) -> DataFrame:
+    """The quads toRdf emits for each turn's ``with_payload`` document,
+    compiled to column expressions: one ``explode`` over a per-turn
+    array of quad structs, so no document is serialised or parsed.
+
+    Mention j's blank node gets ``_:h<md5(conv_id/turn_idx)>n<j>``
+    from the start: the kernel labels it ``_:b<j>`` (the mentions are
+    the document's only blank nodes, issued in array order) and
+    kg_pipeline.canonicalize_bnodes maps that to the same label.
+    ``to_json`` omits null fields, so facts with a null object are
+    dropped. The keys (conv_id, turn_idx) must be non-null.
+
+    Output: (conv_id, turn_idx, graph, subject, predicate, obj_kind,
+    obj_value, obj_type, obj_lang), unique within each turn.
+    """
+    link = _link_map_expr()
+    turn = _turn_iri()
+    key = F.md5(F.concat_ws("/", "conv_id", "turn_idx"))
+    # regexp_extract_all of a null text is null, and a null array would
+    # null the turn's whole fact array in concat
+    surfaces = F.coalesce(_surfaces(), F.array().cast("array<string>"))
+
+    def bnode(rank):
+        return F.concat(F.lit("_:h"), key, F.lit("n"), rank.cast("string"))
+
+    def mention_facts(s, i):
+        return F.array(
+            _quad(turn, E.VOCAB + "mentions", "iri", bnode(i)),
+            *[_fact(bnode(i), f) for f in _mention_fields(s, i, F.element_at(link, s))],
+        )
+
+    # the node map keeps one edge per distinct entity reference
+    entities = F.array_distinct(
+        F.transform(surfaces, lambda s: F.element_at(link, s)["entity_id"])
+    )
+    facts = F.concat(
+        F.array(*[_fact(turn, f) for f in _turn_fields()]),
+        F.flatten(F.transform(surfaces, mention_facts)),
+        F.transform(entities, lambda e: _fact(turn, Field("entities", e))),
+    )
+    return (
+        transcripts.select("conv_id", "turn_idx", F.explode(facts).alias("q"))
+        .where(F.col("q.obj_value").isNotNull())
+        .select("conv_id", "turn_idx", "q.*")
+    )
 
 
 def entity_triples(transcripts: DataFrame) -> DataFrame:

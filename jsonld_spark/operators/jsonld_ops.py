@@ -42,8 +42,8 @@ def _doc_transform(docs: DataFrame, fn, doc_col: str = "jsonld",
 
     pruned = docs.select("conv_id", "turn_idx", doc_col)
     # CPU-bound per-document stage: partition by data volume with a
-    # cores floor, same policy (and same measurements) as the kernel
-    # stage in kg_pipeline.transcripts_to_triples. Callers that know
+    # cores floor, the policy (and measurements) of
+    # kg_pipeline.kernel_partitions. Callers that know
     # the cardinality cheaply (parquet footer counts) pass n_rows;
     # otherwise one count() of the pruned input pays for it
     # (VERDICT r2 #5: the extra job was an avoidable per-query cost).

@@ -1,11 +1,14 @@
-"""S3-S7: expansion kernel stage, blank-node canonicalization, and the
-end-to-end transcripts -> triples pipeline (SURVEY.md §7.0).
+"""S3-S7: the document kernel stage, blank-node canonicalization, and
+the end-to-end transcripts -> triples pipeline (SURVEY.md §7.0).
 
-The only Python in the hot path is one Arrow-batched ``mapInPandas``
-stage running the pure kernels (tree recursion is not expressible in
-Catalyst); everything before it (extraction/payload) and after it
-(canonicalization, dedup, serialization) is native column expressions
-so Catalyst/AQE plan the shuffles.
+The flagship runs no Python: every turn's payload has one fixed shape
+under PIPELINE_CONTEXT, so ``transcripts_to_triples`` emits its quads
+as column expressions (extract.payload_quads), and Catalyst/AQE plan
+the whole job. Arbitrary documents, and the ``jsonld_*`` transforms,
+take the general path: one Arrow-batched ``mapInArrow`` stage running
+the pure kernels (``docs_to_quads``; tree recursion is not expressible
+in Catalyst), then ``canonicalize_bnodes``. That path is also the
+reference the compiled flagship is tested against.
 """
 
 from __future__ import annotations
@@ -19,7 +22,7 @@ from jsonld_spark.kernel.context import initial_context, process_context
 from jsonld_spark.kernel.expand import expand_element
 from jsonld_spark.kernel.nodemap import BlankNodeIssuer, build_node_map
 from jsonld_spark.kernel.rdf import node_map_to_quads
-from jsonld_spark.operators.extract import PIPELINE_CONTEXT, with_payload
+from jsonld_spark.operators.extract import PIPELINE_CONTEXT, entity_triples, payload_quads
 from jsonld_spark.sources.transcripts import transcripts_from_events
 
 QUAD_COLUMNS = ["graph", "subject", "predicate", "obj_kind", "obj_value", "obj_type", "obj_lang"]
@@ -103,7 +106,7 @@ def docs_to_quads(
 
     # Column pruning: ship only the three needed columns into Arrow.
     # parallelism=0 means the caller already repartitioned for CPU
-    # (see transcripts_to_triples); otherwise repartition here — AQE
+    # (e.g. to kernel_partitions); otherwise repartition here — AQE
     # sizes shuffle partitions by BYTES (64 MiB advisory), but this
     # stage's cost is per-row CPU, so a byte-small input would coalesce
     # to a handful of tasks and stop scaling with cores.
@@ -204,19 +207,11 @@ def canonicalize_bnodes(quads: DataFrame) -> DataFrame:
     )
 
 
-def distinct_triples(quads: DataFrame) -> DataFrame:
-    """Global set semantics over the canonical quad columns (the
-    cross-document analogue of mergeIntoProperty(unique=true),
-    Processor.php:2860-2897). This is the pipeline's main shuffle;
-    partial aggregation + AQE absorb the head-entity skew."""
-    return quads.select(*QUAD_COLUMNS).dropDuplicates(QUAD_COLUMNS)
-
-
 TARGET_ROWS_PER_TASK = 16_000
 
 
 def kernel_partitions(spark: SparkSession, n_rows: int | None = None) -> int:
-    """Partition count for the CPU-bound payload+kernel stages: scale
+    """Partition count for the CPU-bound kernel stages: scale
     with DATA (one task per ~TARGET_ROWS_PER_TASK turns) with a
     2x-cores floor for small inputs. Measured at 32 cores: at 100k
     turns the floor wins (per-task Python/Arrow setup dominates —
@@ -235,66 +230,39 @@ def kernel_partitions(spark: SparkSession, n_rows: int | None = None) -> int:
 
 def transcripts_to_triples(
     transcripts: DataFrame,
-    context: dict | None = PIPELINE_CONTEXT,
     keep_lineage: bool = False,
-    dedup: str = "split",
     texts: DataFrame | None = None,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Full S1->S7: transcripts -> canonical deduplicated triples.
 
-    Physical shape (both measured, see BENCH/BASELINE.md):
+    Physical shape: one narrow stage after the transcript window's
+    shuffle — a projection whose ``explode`` emits each turn's quads
+    (extract.payload_quads, no document is built) — unioned with the
+    corpus-level entity facts. The quad stream is unique by
+    construction (every subject embeds the turn key, and each turn's
+    facts are distinct), so it flows to the sink with NO global
+    dropDuplicates; the only cross-turn repeats are the entity facts,
+    emitted relationally by entity_triples() as a small distinct.
 
-    * Repartition BEFORE payload assembly: payload JSON construction
-      and the kernel stage are CPU-per-row bound, and AQE's byte-based
-      coalescing of the upstream window shuffle would otherwise run
-      them on a handful of tasks (0.29 scaling efficiency 8->32 cores
-      before; near-linear after). One shuffle covers both stages.
-    * dedup="split": the document-kernel stream is unique by
-      construction (every subject embeds the turn key; the kernel
-      dedups within a document), so it flows to the sink with NO
-      global dropDuplicates; the only cross-turn repeats are the
-      corpus-level entity facts, emitted relationally by
-      entity_triples() as a small distinct. dedup="global" keeps the
-      classic full-stream dropDuplicates for arbitrary payloads.
+    ``keep_lineage`` returns the per-turn quads with their (conv_id,
+    turn_idx) keys and without the entity facts.
     """
-    # Partitioning scales with data volume (see kernel_partitions).
-    # Callers that know the input cardinality cheaply (parquet footer
-    # counts) pass n_rows; otherwise one count() of the input pays for
-    # correctly-sized CPU stages (trivial next to the kernel work).
-    if n_rows is None:
-        n_rows = transcripts.count()
-    n_parts = kernel_partitions(transcripts.sparkSession, n_rows)
-    parted = transcripts.repartition(n_parts)
-    docs = with_payload(parted)
-    quads = docs_to_quads(docs, context=context, parallelism=0)
-    quads = canonicalize_bnodes(quads)
+    quads = payload_quads(transcripts)
     if keep_lineage:
         return quads
-    from jsonld_spark.operators.extract import entity_triples
-
     # entity facts need only text: a window-free text frame (when the
     # caller has one) skips the row_number shuffle on this branch
-    entities = entity_triples(texts if texts is not None else parted)
-    if dedup == "split":
-        return quads.select(*QUAD_COLUMNS).unionByName(entities)
-    # "global": belt-and-braces full-stream dedup (for payloads without
-    # the per-turn uniqueness invariant)
-    return distinct_triples(quads.select(*QUAD_COLUMNS).unionByName(entities))
+    entities = entity_triples(texts if texts is not None else transcripts)
+    return quads.select(*QUAD_COLUMNS).unionByName(entities)
 
 
 def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship query: events-derived transcripts -> triple set."""
-    from jsonld_spark.plans.session import read_table
     from jsonld_spark.sources.transcripts import transcript_texts
 
-    # row count from parquet footers (metadata-only job) sizes the
-    # CPU-stage partitioning without traversing the data
-    n_rows = read_table(spark, sf_dir, "events").count()
     return transcripts_to_triples(
         transcripts_from_events(spark, sf_dir),
         texts=transcript_texts(spark, sf_dir),
-        n_rows=n_rows,
     )
 
 

@@ -84,11 +84,26 @@ def ensure_package_shipped(spark: SparkSession) -> None:
 
     Python workers don't inherit the driver's sys.path, so any
     mapInPandas closure referencing kernel functions needs the package
-    importable on the worker. Zips the package once per session and
-    registers it via addPyFile. Idempotent."""
+    importable on the worker. Registers the process's package zip
+    (see package_zip) via addPyFile once per SparkContext. Idempotent."""
     sc = spark.sparkContext
     if getattr(sc, "_jsonld_spark_shipped", False):
         return
+    sc.addPyFile(package_zip())
+    sc._jsonld_spark_shipped = True
+
+
+_package_zip: str | None = None
+
+
+def package_zip() -> str:
+    """Zip the package once per process into
+    ``$TMPDIR/jsonld_spark_pyfiles_<pid>.zip``; the zip is removed at
+    interpreter exit (remove_package_zip)."""
+    global _package_zip
+    if _package_zip is not None:
+        return _package_zip
+    import atexit
     import zipfile
 
     import jsonld_spark
@@ -97,16 +112,28 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     zip_path = os.path.join(
         os.environ.get("TMPDIR", "/tmp"), f"jsonld_spark_pyfiles_{os.getpid()}.zip"
     )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fname in files:
-                    if not fname.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fname)
-                    rel = os.path.join(
-                        "jsonld_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
-    sc.addPyFile(zip_path)
-    sc._jsonld_spark_shipped = True
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for fname in files:
+                if not fname.endswith(".py"):
+                    continue
+                full = os.path.join(root, fname)
+                rel = os.path.join("jsonld_spark", os.path.relpath(full, pkg_dir))
+                zf.write(full, rel)
+    _package_zip = zip_path
+    atexit.register(remove_package_zip)
+    return zip_path
+
+
+def remove_package_zip() -> None:
+    """Delete this process's package zip, if it made one. Executors may
+    still fetch the zip while a SparkContext that shipped it runs, so
+    this runs at interpreter exit."""
+    global _package_zip
+    if _package_zip is None:
+        return
+    try:
+        os.remove(_package_zip)
+    except FileNotFoundError:
+        pass
+    _package_zip = None

@@ -95,14 +95,116 @@ def test_pipeline_matches_kernel_differential(spark):
                           surface, xsd_string, None))
     actual = {tuple(r) for r in kg_triples(spark, SF).collect()}
     assert actual == expected
-    # and global-dedup mode yields the same set
-    global_mode = {
-        tuple(r)
-        for r in __import__("jsonld_spark.operators.kg_pipeline", fromlist=["x"])
-        .transcripts_to_triples(t, dedup="global")
-        .collect()
-    }
-    assert global_mode == expected
+
+
+EDGE_TS = "2024-02-29 23:59:58"
+# hand-built turns around the payload's edges: null text/role/ts/tool,
+# 0-3 mentions, an entity repeated within a turn (same surface twice,
+# and an alias beside its primary surface), the ambiguous surface, and
+# text with '"', newlines and non-ASCII characters
+EDGE_TURNS = [
+    ("conv-edge-a", 0, None, None, None, None),
+    ("conv-edge-a", 1, "user", "", "click", EDGE_TS),
+    ("conv-edge-a", 2, None, 'She said "Entity05"\nthen Ent01a — ünïcödé ✓', None, EDGE_TS),
+    ("conv-edge-a", 3, "tool", "Entity00 and Entity00 then Entity13", "signup", None),
+    ("conv-edge-b", 0, "system", "Ent00a, Entity00\r\n\t\"quoted\"", "purchase", EDGE_TS),
+    ("conv-edge-b", 7, "assistant", "no mentions here \\ at all", None, EDGE_TS),
+    ("conv-edge-b", 8, "user", "Entity23", None, None),
+]
+
+
+def edge_transcripts(spark):
+    return spark.createDataFrame(
+        EDGE_TURNS,
+        "conv_id string, turn_idx int, role string, text string, tool string, ts string",
+    ).withColumn("ts", F.to_timestamp("ts"))
+
+
+def assert_same_rows(left, right):
+    """Equal as multisets, in both directions (exceptAll keeps
+    duplicates); returns the row count."""
+    assert left.exceptAll(right).count() == 0
+    assert right.exceptAll(left).count() == 0
+    return left.count()
+
+
+def test_compiled_quads_match_kernel_path(spark):
+    """The flagship's compiled toRdf emits exactly the quads of the
+    kernel path (to_json payload -> expand -> node map -> toRdf ->
+    blank-node relabel), lineage keys included, on the corpus and on
+    hand-built edge turns."""
+    cols = ["conv_id", "turn_idx", *QUAD_COLUMNS]
+    for t in (transcripts_from_events(spark, SF), edge_transcripts(spark)):
+        compiled = transcripts_to_triples(t, keep_lineage=True).select(*cols)
+        kernel = canonicalize_bnodes(docs_to_quads(with_payload(t))).select(*cols)
+        assert assert_same_rows(compiled, kernel) > 0
+    # the edge turns reach the branches: omitted nulls, one entity edge
+    # per distinct entity, and every text kept verbatim
+    edge = transcripts_to_triples(edge_transcripts(spark), keep_lineage=True)
+    preds = edge.groupBy("conv_id", "turn_idx").agg(
+        F.collect_list(F.substring_index("predicate", "#", -1)).alias("p"))
+    by_turn = {(r["conv_id"], r["turn_idx"]): sorted(r["p"]) for r in preds.collect()}
+    assert by_turn[("conv-edge-a", 0)] == ["inConversation", "turnIndex", "type"]
+    assert by_turn[("conv-edge-a", 3)].count("entities") == 2  # E0 twice, E24
+    assert by_turn[("conv-edge-a", 3)].count("mentions") == 3
+    assert by_turn[("conv-edge-b", 0)].count("entities") == 1  # alias + primary of E0
+    texts = {r["obj_value"] for r in edge.where(F.col("predicate") == E.VOCAB + "text").collect()}
+    assert {row[3] for row in EDGE_TURNS if row[3] is not None} == texts
+
+
+def payload_before(transcripts):
+    """A frozen copy of with_payload's document construction: the
+    byte-identity reference for the field-table version."""
+    from jsonld_spark.operators.extract import (
+        CONV_IRI_PREFIX,
+        TOOL_IRI_PREFIX,
+        TURN_IRI_PREFIX,
+        _link_map_expr,
+    )
+
+    link = _link_map_expr()
+    turn_iri = F.concat(
+        F.lit(TURN_IRI_PREFIX), F.col("conv_id"), F.lit("/"), F.col("turn_idx")
+    )
+    conv_iri = F.concat(F.lit(CONV_IRI_PREFIX), F.col("conv_id"))
+    surfaces = F.regexp_extract_all("text", F.lit(E.surface_pattern()), 1)
+    mentions = F.transform(
+        surfaces,
+        lambda s, i: F.struct(
+            F.lit("Mention").alias("@type"),
+            i.alias("rank"),
+            s.alias("surface"),
+            F.element_at(link, s)["prior"].alias("score"),
+            F.element_at(link, s)["entity_id"].alias("target"),
+        ),
+    )
+    entity_refs = F.transform(surfaces, lambda s: F.element_at(link, s)["entity_id"])
+    doc = F.to_json(
+        F.struct(
+            turn_iri.alias("@id"),
+            F.lit("Turn").alias("@type"),
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("atTime"),
+            conv_iri.alias("inConversation"),
+            F.col("role").alias("role"),
+            F.col("turn_idx").alias("turnIndex"),
+            F.col("text").alias("text"),
+            F.when(
+                F.col("tool").isNotNull(), F.concat(F.lit(TOOL_IRI_PREFIX), F.col("tool"))
+            ).alias("tool"),
+            mentions.alias("mentions"),
+            entity_refs.alias("entities"),
+        )
+    )
+    return transcripts.withColumn("turn_iri", turn_iri).withColumn("jsonld", doc)
+
+
+def test_with_payload_document_is_unchanged(spark):
+    """The document kernel-path consumers read (jsonld_* transforms,
+    kg_parse_errors) stays byte-identical."""
+    cols = ["conv_id", "turn_idx", "turn_iri", "jsonld"]
+    for t in (transcripts_from_events(spark, SF), edge_transcripts(spark)):
+        assert assert_same_rows(with_payload(t).select(*cols),
+                                payload_before(t).select(*cols)) > 0
 
 
 def test_per_turn_text_equality_invariant(spark):

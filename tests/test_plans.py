@@ -32,26 +32,42 @@ def physical_plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
 
 
+PYTHON_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
+def kernel_path_docs(spark):
+    from jsonld_spark.operators.extract import with_payload
+    from jsonld_spark.sources.transcripts import transcripts_from_events
+
+    return with_payload(transcripts_from_events(spark, SF))
+
+
 def test_kernel_stage_runs_once(spark):
-    """The Python kernel is the expensive stage; the plan must contain
-    exactly one of it (the first split-dedup design accidentally ran
-    it per Union branch)."""
+    """The flagship runs no Python at all: its toRdf is compiled to
+    column expressions. The general kernel path keeps exactly one
+    kernel stage (the first split-dedup design accidentally ran it per
+    Union branch)."""
+    from jsonld_spark.operators.kg_pipeline import docs_to_quads
+
     plan = physical_plan_of(kg_triples(spark, SF))
-    n = plan.count("MapInArrow") + plan.count("MapInPandas")
+    assert not any(node in plan for node in PYTHON_NODES), plan
+    plan = physical_plan_of(docs_to_quads(kernel_path_docs(spark)))
+    n = sum(plan.count(node) for node in PYTHON_NODES)
     assert n == 1, plan
 
 
 def test_no_global_distinct_on_kernel_stream(spark):
     """Set semantics come from per-turn uniqueness + the small entity
-    distinct — there must be no aggregate directly over the kernel
-    output columns (conv_id-keyed stream)."""
+    distinct — there must be no aggregate directly over the compiled
+    quad stream (the conv_id-keyed explode)."""
     plan = physical_plan_of(kg_triples(spark, SF))
-    kernel_idx = max(plan.find("MapInArrow"), plan.find("MapInPandas"))
-    above_kernel = plan[:kernel_idx]
-    # the only aggregates above the kernel in tree order belong to the
-    # entity branch; the kernel branch feeds the Union directly
+    quads_idx = plan.find("Generate explode")
+    assert quads_idx >= 0, plan
+    above_quads = plan[:quads_idx]
+    # the only aggregates above the explode in tree order belong to the
+    # entity branch; the quad branch feeds the Union directly
     assert "Union" in plan
-    assert above_kernel.count("HashAggregate") <= 2  # entity distinct only
+    assert above_quads.count("HashAggregate") <= 2  # entity distinct only
 
 
 def test_shipdate_filter_is_pushed_down(spark):
@@ -66,11 +82,12 @@ def test_dimension_join_is_broadcast(spark):
 
 
 def test_kernel_stage_parallelism_is_explicit(spark):
-    """The repartition before the CPU-bound stages must survive:
+    """The repartition before the CPU-bound kernel stage must survive:
     without it AQE byte-coalescing strangles the kernel stage."""
-    tri = kg_triples(spark, SF)
-    plan = physical_plan_of(tri)
-    kernel_idx = max(plan.find("MapInArrow"), plan.find("MapInPandas"))
+    from jsonld_spark.operators.kg_pipeline import docs_to_quads
+
+    plan = physical_plan_of(docs_to_quads(kernel_path_docs(spark)))
+    kernel_idx = max(plan.find(node) for node in PYTHON_NODES)
     assert "Exchange RoundRobinPartitioning" in plan[kernel_idx:], plan
 
 
