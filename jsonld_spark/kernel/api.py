@@ -39,13 +39,19 @@ def _unwrap_context(ctx):
 
 
 def expand(doc, base=None, expand_context=None, frame=False, loader=None) -> list:
-    """Expand a JSON-LD document; always returns a list of node objects
-    (reference: JsonLD.php:134-172 incl. the top-level @graph unwrap)."""
+    """Expand a JSON-LD document; always returns a list of node objects."""
     doc = _parse_input(doc)
     activectx = initial_context(base)
     if expand_context is not None:
         process_context(_unwrap_context(_parse_input(expand_context)), activectx,
                         base_iri=base, loader=loader)
+    return expand_with(doc, activectx, base, frame, loader)
+
+
+def expand_with(doc, activectx, base=None, frame=False, loader=None) -> list:
+    """Expand a parsed document under a resolved active context, unwrap
+    a top-level @graph and return a list (reference: JsonLD.php:134-172).
+    The per-document step of every entry point and kernel stage."""
     result = expand_element(doc, activectx, None, frame, loader, base)
     if isinstance(result, dict) and len(result) == 1 and "@graph" in result:
         result = result["@graph"]
@@ -83,26 +89,26 @@ def flatten(doc, context=None, base=None, expand_context=None, loader=None):
     the reference's ``flatten($input, $context, $options)`` — callers
     that previously passed ``base`` as the second positional argument
     must switch to ``base=...`` (all in-repo callers use keywords)."""
-    expanded = expand(doc, base=base, expand_context=expand_context, loader=loader)
-    node_map = build_node_map(expanded, BlankNodeIssuer())
-    default_graph = node_map.pop("@default")
-    for graph_name, graph in node_map.items():
-        entry = default_graph.get(graph_name)
-        if entry is None:
-            entry = {"@id": graph_name}
-            default_graph[graph_name] = entry
-        entry["@graph"] = [
-            graph[k] for k in php_ksort_keys(graph) if len(graph[k]) > 1
-        ]
-    flattened = [
-        default_graph[k] for k in php_ksort_keys(default_graph) if len(default_graph[k]) > 1
-    ]
+    flattened = flatten_expanded(
+        expand(doc, base=base, expand_context=expand_context, loader=loader))
     if context is None:
         return flattened
     from jsonld_spark.kernel.compaction import compact_document  # lazy: P2 module
 
     return compact_document(flattened, _parse_input(context), base=base,
                             always_graph=True, loader=loader)
+
+
+def flatten_expanded(expanded: list) -> list:
+    """Expanded document -> node map -> the sorted flattened array
+    (Processor.php:2088-2119)."""
+    node_map = build_node_map(expanded, BlankNodeIssuer())
+    default_graph = node_map.pop("@default")
+    for graph_name, graph in node_map.items():
+        entry = default_graph.setdefault(graph_name, {"@id": graph_name})
+        entry["@graph"] = [graph[k] for k in php_ksort_keys(graph) if len(graph[k]) > 1]
+    return [default_graph[k] for k in php_ksort_keys(default_graph)
+            if len(default_graph[k]) > 1]
 
 
 def compact(doc, context=None, base=None, expand_context=None, compact_arrays=True,

@@ -10,7 +10,7 @@ Result-identical to the reference (Processor.php:1896-2055
 ``generateNodeMap``, Processor.php:2069-2079 ``getBlankNodeId``),
 including blank-node label assignment order, so that single-process
 output is byte-identical. In the Spark pipeline this runs per document
-inside a ``mapInPandas`` stage with a document-local issuer; labels are
+inside the kernel stage (operators/kg_pipeline.py) with a document-local issuer; labels are
 then globally renumbered by a stable window (SURVEY.md §7.1 step 3).
 """
 

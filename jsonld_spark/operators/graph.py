@@ -739,6 +739,11 @@ def kcore_nodes(
     therefore localCheckpoint()ed every round, same as the
     pointer-jumping loop in components.py (at cluster scale these
     become reliable df.checkpoint()s).
+
+    Eager: building the DataFrame runs Spark jobs. Each round's
+    ``localCheckpoint`` materialises the live edge set, and
+    ``check_converged=True`` adds one more checkpoint and two counts,
+    so the peels are paid before the returned DataFrame is consumed.
     """
     live = edges.select(
         F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")

@@ -4,11 +4,12 @@ the end-to-end transcripts -> triples pipeline (SURVEY.md §7.0).
 The flagship runs no Python: every turn's payload has one fixed shape
 under PIPELINE_CONTEXT, so ``transcripts_to_triples`` emits its quads
 as column expressions (extract.payload_quads), and Catalyst/AQE plan
-the whole job. Arbitrary documents, and the ``jsonld_*`` transforms,
-take the general path: one Arrow-batched ``mapInArrow`` stage running
-the pure kernels (``docs_to_quads``; tree recursion is not expressible
-in Catalyst), then ``canonicalize_bnodes``. That path is also the
-reference the compiled flagship is tested against.
+the whole job. Arbitrary documents take the general path, as do the
+``jsonld_*`` transforms and the quarantine channel: ``kernel_stage``,
+one Arrow-batched ``mapInArrow`` running a pure per-document kernel
+(tree recursion is not expressible in Catalyst); ``docs_to_quads`` is
+followed by ``canonicalize_bnodes``. That path is also the reference
+the compiled flagship is tested against.
 """
 
 from __future__ import annotations
@@ -18,10 +19,10 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jsonld_spark.kernel.api import expand_with
 from jsonld_spark.kernel.context import initial_context, process_context
-from jsonld_spark.kernel.expand import expand_element
-from jsonld_spark.kernel.nodemap import BlankNodeIssuer, build_node_map
-from jsonld_spark.kernel.rdf import node_map_to_quads
+from jsonld_spark.kernel.exceptions import JsonLdError
+from jsonld_spark.kernel.rdf import expanded_to_quads
 from jsonld_spark.operators.extract import PIPELINE_CONTEXT, entity_triples, payload_quads
 from jsonld_spark.sources.transcripts import transcripts_from_events
 
@@ -30,153 +31,109 @@ QUAD_SCHEMA = (
     "conv_id string, turn_idx int, graph string, subject string, predicate string, "
     "obj_kind string, obj_value string, obj_type string, obj_lang string"
 )
+ERROR_QUAD_SCHEMA = QUAD_SCHEMA + ", _error string"
 
 
 def resolve_context(context: dict | None, base: str | None = None) -> dict:
     """Resolve a JSON-LD context once on the driver (S2). The resolved
     active context is a small dict, closure-captured into the kernel
     stage (Spark ships it once per task via the serialized closure,
-    equivalent to an explicit broadcast at this size)."""
+    equivalent to an explicit broadcast at this size) and used as-is on
+    workers: pickling keeps its definition memo."""
     activectx = initial_context(base)
     if context is not None:
         process_context(context, activectx, base_iri=base)
     return activectx
 
 
+def kernel_stage(docs: DataFrame, per_doc, schema: str, n_parts: int) -> DataFrame:
+    """The one per-document kernel stage: ``per_doc(conv_id, turn_idx,
+    doc)`` returns the output rows (tuples in ``schema`` order) of one
+    ``jsonld`` string, run in one ``mapInArrow`` over (conv_id,
+    turn_idx, jsonld) that builds the Arrow output directly.
+
+    ``n_parts`` > 0 repartitions first; 0 means the caller already did.
+    AQE sizes shuffle partitions by BYTES, but this stage's cost is
+    per-row CPU, so a byte-small input would coalesce to a handful of
+    tasks and stop scaling with cores (see kernel_partitions).
+    """
+    import pyarrow as pa
+
+    from jsonld_spark.plans.session import ensure_package_shipped
+
+    ensure_package_shipped(docs.sparkSession)
+    arrow_types = {"string": pa.string(), "int": pa.int32()}
+    row_type = pa.struct([
+        (name, arrow_types[kind]) for name, kind in (f.split() for f in schema.split(","))
+    ])
+
+    def run(batches):
+        for batch in batches:
+            rows = []
+            for conv_id, turn_idx, doc in zip(*(c.to_pylist() for c in batch.columns)):
+                rows.extend(per_doc(conv_id, turn_idx, doc))
+            # one struct array from the row tuples: ~1.3x cheaper than
+            # appending each value to a per-column list
+            yield pa.RecordBatch.from_struct_array(pa.array(rows, row_type))
+
+    pruned = docs.select("conv_id", "turn_idx", "jsonld")
+    if n_parts:
+        pruned = pruned.repartition(n_parts)
+    return pruned.mapInArrow(run, schema)
+
+
 def docs_to_quads(
     docs: DataFrame,
     context: dict | None = PIPELINE_CONTEXT,
     base: str | None = None,
-    generalized_rdf: bool = False,
-    doc_col: str = "jsonld",
     parallelism: int | None = None,
 ) -> DataFrame:
     """S3+S4: per-document expand -> node map -> quads, exploded 1->N.
 
-    Input needs (conv_id, turn_idx, <doc_col>); output one row per quad
+    Input needs (conv_id, turn_idx, jsonld); output one row per quad
     with lineage columns (conv_id, turn_idx) and document-local
-    ``_:bN`` blank-node labels (deterministic per document).
+    ``_:bN`` blank-node labels (deterministic per document). Null
+    documents emit nothing. ``parallelism`` is the kernel_stage
+    partition count (default kernel_partitions; 0: already partitioned).
     """
-    from jsonld_spark.plans.session import ensure_package_shipped
-
-    ensure_package_shipped(docs.sparkSession)
     activectx = resolve_context(context, base)
 
-    def emit(batches):
-        import pyarrow as pa
+    def per_doc(conv_id, turn_idx, doc):
+        if doc is None:
+            return ()
+        expanded = expand_with(json.loads(doc), activectx, base)
+        return [(conv_id, turn_idx, *quad) for quad in expanded_to_quads(expanded)]
 
-        from jsonld_spark.kernel.context import ActiveContext
-
-        # re-wrap on the worker: the definition memo does not survive
-        # pickling, and a warm memo is a ~1.3x kernel speedup
-        ctx = ActiveContext(activectx)
-        # columnar output buffers: building pyarrow arrays directly is
-        # ~1.4x cheaper than pd.DataFrame(list-of-tuples) + pandas->Arrow
-        names = ["conv_id", "turn_idx", *QUAD_COLUMNS]
-        for batch in batches:
-            conv_ids, turn_idxs, docs_col = (
-                batch.column(0).to_pylist(),
-                batch.column(1).to_pylist(),
-                batch.column(2).to_pylist(),
-            )
-            cols = [[] for _ in names]
-            for conv_id, turn_idx, doc in zip(conv_ids, turn_idxs, docs_col):
-                if doc is None:
-                    continue
-                expanded = expand_element(json.loads(doc), ctx, None, False, None, base)
-                if isinstance(expanded, dict) and len(expanded) == 1 and "@graph" in expanded:
-                    expanded = expanded["@graph"]
-                if not isinstance(expanded, list):
-                    expanded = [] if expanded is None else [expanded]
-                issuer = BlankNodeIssuer()
-                node_map = build_node_map(expanded, issuer)
-                for quad in node_map_to_quads(node_map, issuer, generalized_rdf):
-                    cols[0].append(conv_id)
-                    cols[1].append(turn_idx)
-                    for i, value in enumerate(quad, start=2):
-                        cols[i].append(value)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols[0], pa.string()),
-                    pa.array(cols[1], pa.int32()),
-                    *[pa.array(c, pa.string()) for c in cols[2:]],
-                ],
-                names=names,
-            )
-
-    # Column pruning: ship only the three needed columns into Arrow.
-    # parallelism=0 means the caller already repartitioned for CPU
-    # (e.g. to kernel_partitions); otherwise repartition here — AQE
-    # sizes shuffle partitions by BYTES (64 MiB advisory), but this
-    # stage's cost is per-row CPU, so a byte-small input would coalesce
-    # to a handful of tasks and stop scaling with cores.
-    pruned = docs.select("conv_id", "turn_idx", doc_col)
-    if parallelism != 0:
-        n_parts = parallelism or 2 * docs.sparkSession.sparkContext.defaultParallelism
-        pruned = pruned.repartition(n_parts)
-    return pruned.mapInArrow(emit, QUAD_SCHEMA)
-
-
-ERROR_QUAD_SCHEMA = QUAD_SCHEMA + ", _error string"
+    if parallelism is None:
+        parallelism = kernel_partitions(docs.sparkSession)
+    return kernel_stage(docs, per_doc, QUAD_SCHEMA, parallelism)
 
 
 def docs_to_quads_safe(
     docs: DataFrame,
     context: dict | None = PIPELINE_CONTEXT,
     base: str | None = None,
-    generalized_rdf: bool = False,
-    doc_col: str = "jsonld",
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Error-tolerant kernel stage: documents that fail to parse or
     expand produce one row with ``_error`` set to the spec error code
     instead of failing the job (the corrupt-record channel for the
     reference's parse/expansion error taxonomy, Processor.php:180-228;
     a 100 TB ingest quarantines bad documents, it doesn't die)."""
-    from jsonld_spark.kernel.exceptions import JsonLdError
-    from jsonld_spark.plans.session import ensure_package_shipped
-
-    ensure_package_shipped(docs.sparkSession)
     activectx = resolve_context(context, base)
+    nulls = (None,) * len(QUAD_COLUMNS)
 
-    def emit(batches):
-        import pandas as pd
+    def per_doc(conv_id, turn_idx, doc):
+        if doc is None:
+            return [(conv_id, turn_idx, *nulls, "missing document")]
+        try:
+            expanded = expand_with(json.loads(doc), activectx, base)
+        except JsonLdError as exc:
+            return [(conv_id, turn_idx, *nulls, exc.code)]
+        except ValueError:
+            return [(conv_id, turn_idx, *nulls, "loading document failed")]
+        return [(conv_id, turn_idx, *quad, None) for quad in expanded_to_quads(expanded)]
 
-        from jsonld_spark.kernel.context import ActiveContext
-
-        ctx = ActiveContext(activectx)
-        nulls = (None,) * len(QUAD_COLUMNS)
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, doc in zip(pdf["conv_id"], pdf["turn_idx"], pdf[doc_col]):
-                if doc is None:
-                    rows.append((conv_id, turn_idx) + nulls + ("missing document",))
-                    continue
-                try:
-                    expanded = expand_element(json.loads(doc), ctx, None, False, None, base)
-                except JsonLdError as exc:
-                    rows.append((conv_id, turn_idx) + nulls + (exc.code,))
-                    continue
-                except ValueError:
-                    rows.append((conv_id, turn_idx) + nulls + ("loading document failed",))
-                    continue
-                if isinstance(expanded, dict) and len(expanded) == 1 and "@graph" in expanded:
-                    expanded = expanded["@graph"]
-                if not isinstance(expanded, list):
-                    expanded = [] if expanded is None else [expanded]
-                issuer = BlankNodeIssuer()
-                node_map = build_node_map(expanded, issuer)
-                for quad in node_map_to_quads(node_map, issuer, generalized_rdf):
-                    rows.append((conv_id, turn_idx) + quad + (None,))
-            yield pd.DataFrame(
-                rows, columns=["conv_id", "turn_idx"] + QUAD_COLUMNS + ["_error"]
-            )
-
-    pruned = docs.select("conv_id", "turn_idx", doc_col)
-    if parallelism != 0:
-        n_parts = parallelism or 2 * docs.sparkSession.sparkContext.defaultParallelism
-        pruned = pruned.repartition(n_parts)
-    return pruned.mapInPandas(emit, ERROR_QUAD_SCHEMA)
+    return kernel_stage(docs, per_doc, ERROR_QUAD_SCHEMA, kernel_partitions(docs.sparkSession))
 
 
 def _relabel(col, key):

@@ -45,10 +45,10 @@ def get_spark(
         # is spill RATIO: the ~1e9-row candidate sort of degree-weighted
         # negative sampling at sf0.1 fills the sandbox disk under lz4
         # and survives under zstd — so large-volume spilling jobs opt in
-        # via SPARK_GRAFT_IO_CODEC=zstd (tools/volume_check.py and the
-        # sf0.1 sweep do); the default stays Spark's lz4.
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"))
+        # via SPARK_GRAFT_IO_CODEC=zstd (tools/volume_check.py and
+        # tools/check_oracles.py default to it and fail fast through
+        # require_io_codec); the default stays Spark's lz4.
+        .config("spark.io.compression.codec", _io_codec())
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -73,6 +73,22 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def _io_codec() -> str:
+    return os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4")
+
+
+def require_io_codec(spark: SparkSession) -> None:
+    """Fail fast unless the session runs the codec get_spark asks for
+    ($SPARK_GRAFT_IO_CODEC): getOrCreate hands back a live session with
+    its own codec and drops the requested one silently."""
+    wanted = _io_codec()
+    got = spark.sparkContext.getConf().get("spark.io.compression.codec", "lz4")
+    if got != wanted:
+        raise RuntimeError(
+            f"the Spark session runs io codec {got!r}, not SPARK_GRAFT_IO_CODEC={wanted!r}: "
+            "getOrCreate returned a session started with other settings; stop it and rerun")
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one of the driver-provided parquet tables."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
@@ -83,7 +99,7 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     equivalent of ``spark-submit --py-files jsonld_spark.zip``).
 
     Python workers don't inherit the driver's sys.path, so any
-    mapInPandas closure referencing kernel functions needs the package
+    Python-stage closure referencing kernel functions needs the package
     importable on the worker. Registers the process's package zip
     (see package_zip) via addPyFile once per SparkContext. Idempotent."""
     sc = spark.sparkContext

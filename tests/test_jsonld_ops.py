@@ -7,12 +7,12 @@ import os
 
 import pytest
 
+from jsonld_spark.kernel.api import expand_with
 from jsonld_spark.kernel.compaction import compact_element, create_inverse_context
 from jsonld_spark.kernel.fromrdf import quads_to_jsonld
 from jsonld_spark.kernel.rdf import Quad
 from jsonld_spark.operators.extract import PIPELINE_CONTEXT, with_payload
 from jsonld_spark.operators.jsonld_ops import (
-    _expand_with,
     compact_documents,
     expand_documents,
     flatten_documents,
@@ -28,8 +28,15 @@ pytestmark = pytest.mark.skipif(
 )
 
 
+NULL_KEY = ("null-doc", 0)
+
+
 def _docs(spark, n=50):
-    return with_payload(transcripts_from_events(spark, SF)).limit(n)
+    """n payload documents plus one row whose jsonld is null."""
+    null_doc = spark.createDataFrame([(*NULL_KEY, None)],
+                                     "conv_id string, turn_idx int, jsonld string")
+    return with_payload(transcripts_from_events(spark, SF)).limit(n).unionByName(
+        null_doc, allowMissingColumns=True)
 
 
 def test_expand_documents_matches_kernel(spark):
@@ -37,11 +44,12 @@ def test_expand_documents_matches_kernel(spark):
     rows = docs.select("conv_id", "turn_idx", "jsonld").collect()
     activectx = resolve_context(PIPELINE_CONTEXT)
     expected = {
-        (r["conv_id"], r["turn_idx"]): json.dumps(
-            _expand_with(r["jsonld"], activectx, None), sort_keys=True
+        (r["conv_id"], r["turn_idx"]): None if r["jsonld"] is None else json.dumps(
+            expand_with(json.loads(r["jsonld"]), activectx, None), sort_keys=True
         )
         for r in rows
     }
+    assert expected[NULL_KEY] is None
     actual = {
         (r["conv_id"], r["turn_idx"]): r["doc"]
         for r in expand_documents(docs).collect()
@@ -60,9 +68,13 @@ def test_compact_documents_roundtrip(spark):
         for r in docs.select("conv_id", "turn_idx", "jsonld").collect()
     }
     for row in out:
+        if (row["conv_id"], row["turn_idx"]) == NULL_KEY:
+            assert row["doc"] is None
+            continue
         compacted = json.loads(row["doc"])
         expected = compact_element(
-            _expand_with(originals[(row["conv_id"], row["turn_idx"])], activectx, None),
+            expand_with(json.loads(originals[(row["conv_id"], row["turn_idx"])]),
+                        activectx, None),
             activectx, inversectx, None, True,
         )
         assert compacted == expected
@@ -73,8 +85,9 @@ def test_compact_documents_roundtrip(spark):
 
 def test_flatten_documents_shape(spark):
     docs = _docs(spark)
-    out = flatten_documents(docs).collect()
-    flat = json.loads(out[0]["doc"])
+    out = {(r["conv_id"], r["turn_idx"]): r["doc"] for r in flatten_documents(docs).collect()}
+    assert out.pop(NULL_KEY) is None
+    flat = json.loads(next(iter(out.values())))
     ids = [n["@id"] for n in flat]
     assert ids == sorted(ids)  # flatten sorts subjects
     turn_nodes = [n for n in flat if "/turn/" in n["@id"]]

@@ -42,18 +42,30 @@ def kernel_path_docs(spark):
     return with_payload(transcripts_from_events(spark, SF))
 
 
+def kernel_stage_builders():
+    """The five builders over per-document JSON-LD, all kernel_stage."""
+    from jsonld_spark.operators.jsonld_ops import (
+        compact_documents,
+        expand_documents,
+        flatten_documents,
+    )
+    from jsonld_spark.operators.kg_pipeline import docs_to_quads, docs_to_quads_safe
+
+    return [docs_to_quads, docs_to_quads_safe, expand_documents, compact_documents,
+            flatten_documents]
+
+
 def test_kernel_stage_runs_once(spark):
     """The flagship runs no Python at all: its toRdf is compiled to
-    column expressions. The general kernel path keeps exactly one
-    kernel stage (the first split-dedup design accidentally ran it per
-    Union branch)."""
-    from jsonld_spark.operators.kg_pipeline import docs_to_quads
-
+    column expressions. Every per-document builder keeps exactly one
+    kernel stage, a MapInArrow (the first split-dedup design
+    accidentally ran it per Union branch)."""
     plan = physical_plan_of(kg_triples(spark, SF))
     assert not any(node in plan for node in PYTHON_NODES), plan
-    plan = physical_plan_of(docs_to_quads(kernel_path_docs(spark)))
-    n = sum(plan.count(node) for node in PYTHON_NODES)
-    assert n == 1, plan
+    for build in kernel_stage_builders():
+        plan = physical_plan_of(build(kernel_path_docs(spark)))
+        n = sum(plan.count(node) for node in PYTHON_NODES)
+        assert n == 1 and plan.count("MapInArrow") == 1, (build.__name__, plan)
 
 
 def test_no_global_distinct_on_kernel_stream(spark):
@@ -84,11 +96,11 @@ def test_dimension_join_is_broadcast(spark):
 def test_kernel_stage_parallelism_is_explicit(spark):
     """The repartition before the CPU-bound kernel stage must survive:
     without it AQE byte-coalescing strangles the kernel stage."""
-    from jsonld_spark.operators.kg_pipeline import docs_to_quads
-
-    plan = physical_plan_of(docs_to_quads(kernel_path_docs(spark)))
-    kernel_idx = max(plan.find(node) for node in PYTHON_NODES)
-    assert "Exchange RoundRobinPartitioning" in plan[kernel_idx:], plan
+    for build in kernel_stage_builders():
+        plan = physical_plan_of(build(kernel_path_docs(spark)))
+        kernel_idx = plan.find("MapInArrow")
+        assert kernel_idx >= 0, (build.__name__, plan)
+        assert "Exchange RoundRobinPartitioning" in plan[kernel_idx:], (build.__name__, plan)
 
 
 def test_simhash_guard_is_pushed_to_scan(spark):
@@ -138,8 +150,8 @@ def test_graph_ops_build_lazily(spark):
         triangle_counts,
     )
 
-    # kg_triples itself runs one metadata-only footer-count job at
-    # build (documented) — snapshot the job count after it
+    # building kg_triples runs no job either; snapshotting the job
+    # count after it keeps this test about the graph operators
     edges = iri_edges(kg_triples(spark, SF))
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup() or [])

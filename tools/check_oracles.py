@@ -16,7 +16,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entry_mod
-from jsonld_spark.plans.session import get_spark
+from jsonld_spark.plans.session import get_spark, require_io_codec
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -27,7 +27,11 @@ TABLES = [
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     wanted = sys.argv[2:]
+    # the negative samplers spill ~1e9-row candidate sorts at sf0.1;
+    # zstd's spill ratio is what fits them on disk (plans/session.py)
+    os.environ.setdefault("SPARK_GRAFT_IO_CODEC", "zstd")
     spark = get_spark(app_name="oracle-check", cores=8, shuffle_partitions=16)
+    require_io_codec(spark)
 
     con = duckdb.connect()
     for t in TABLES:

@@ -35,45 +35,44 @@ def summarize_events(paths: list[str], only_desc: str | None = None) -> list[dic
     this substring (so the warm rep can be isolated from the warm-up)."""
     stages: dict[tuple, dict] = {}
     keep_stage_ids: set[int] | None = set() if only_desc else None
-    if True:
-        for line in _iter_lines(paths):
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            kind = ev.get("Event")
-            if kind == "SparkListenerJobStart" and only_desc is not None:
-                desc = (ev.get("Properties") or {}).get("spark.job.description", "")
-                if only_desc in desc:
-                    for sid in ev.get("Stage IDs", []):
-                        keep_stage_ids.add(sid)
-                continue
-            if kind == "SparkListenerStageCompleted":
-                info = ev["Stage Info"]
-                key = (info["Stage ID"], info["Stage Attempt ID"])
-                st = stages.setdefault(key, {"tasks": 0})
-                st["name"] = info["Stage Name"].split("\n")[0][:90]
-                sub = info.get("Submission Time")
-                comp = info.get("Completion Time")
-                st["wall_ms"] = (comp - sub) if sub and comp else None
-            elif kind == "SparkListenerTaskEnd":
-                key = (ev["Stage ID"], ev["Stage Attempt ID"])
-                st = stages.setdefault(key, {"tasks": 0})
-                st["tasks"] += 1
-                m = ev.get("Task Metrics") or {}
-                st["task_ms"] = st.get("task_ms", 0) + m.get("Executor Run Time", 0)
-                st["gc_ms"] = st.get("gc_ms", 0) + m.get("JVM GC Time", 0)
-                st["cpu_ms"] = st.get("cpu_ms", 0) + (m.get("Executor CPU Time", 0) // 1_000_000)
-                inp = m.get("Input Metrics") or {}
-                st["input_mb"] = st.get("input_mb", 0) + inp.get("Bytes Read", 0) / 1e6
-                srm = m.get("Shuffle Read Metrics") or {}
-                st["sh_read_mb"] = st.get("sh_read_mb", 0) + (
-                    srm.get("Local Bytes Read", 0) + srm.get("Remote Bytes Read", 0)
-                ) / 1e6
-                st["fetch_ms"] = st.get("fetch_ms", 0) + srm.get("Fetch Wait Time", 0)
-                swm = m.get("Shuffle Write Metrics") or {}
-                st["sh_write_mb"] = st.get("sh_write_mb", 0) + swm.get("Shuffle Bytes Written", 0) / 1e6
-                st["spill_mb"] = st.get("spill_mb", 0) + m.get("Disk Bytes Spilled", 0) / 1e6
+    for line in _iter_lines(paths):
+        try:
+            ev = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        kind = ev.get("Event")
+        if kind == "SparkListenerJobStart" and only_desc is not None:
+            desc = (ev.get("Properties") or {}).get("spark.job.description", "")
+            if only_desc in desc:
+                for sid in ev.get("Stage IDs", []):
+                    keep_stage_ids.add(sid)
+            continue
+        if kind == "SparkListenerStageCompleted":
+            info = ev["Stage Info"]
+            key = (info["Stage ID"], info["Stage Attempt ID"])
+            st = stages.setdefault(key, {"tasks": 0})
+            st["name"] = info["Stage Name"].split("\n")[0][:90]
+            sub = info.get("Submission Time")
+            comp = info.get("Completion Time")
+            st["wall_ms"] = (comp - sub) if sub and comp else None
+        elif kind == "SparkListenerTaskEnd":
+            key = (ev["Stage ID"], ev["Stage Attempt ID"])
+            st = stages.setdefault(key, {"tasks": 0})
+            st["tasks"] += 1
+            m = ev.get("Task Metrics") or {}
+            st["task_ms"] = st.get("task_ms", 0) + m.get("Executor Run Time", 0)
+            st["gc_ms"] = st.get("gc_ms", 0) + m.get("JVM GC Time", 0)
+            st["cpu_ms"] = st.get("cpu_ms", 0) + (m.get("Executor CPU Time", 0) // 1_000_000)
+            inp = m.get("Input Metrics") or {}
+            st["input_mb"] = st.get("input_mb", 0) + inp.get("Bytes Read", 0) / 1e6
+            srm = m.get("Shuffle Read Metrics") or {}
+            st["sh_read_mb"] = st.get("sh_read_mb", 0) + (
+                srm.get("Local Bytes Read", 0) + srm.get("Remote Bytes Read", 0)
+            ) / 1e6
+            st["fetch_ms"] = st.get("fetch_ms", 0) + srm.get("Fetch Wait Time", 0)
+            swm = m.get("Shuffle Write Metrics") or {}
+            st["sh_write_mb"] = st.get("sh_write_mb", 0) + swm.get("Shuffle Bytes Written", 0) / 1e6
+            st["spill_mb"] = st.get("spill_mb", 0) + m.get("Disk Bytes Spilled", 0) / 1e6
     out = []
     for (sid, att), st in sorted(stages.items()):
         if keep_stage_ids is not None and sid not in keep_stage_ids:

@@ -26,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from jsonld_spark.plans.session import get_spark
+from jsonld_spark.plans.session import get_spark, require_io_codec
 
 DOC_REPS = 128
 EMB_REPS = 32
@@ -42,6 +42,7 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_IO_CODEC", "zstd")
     spark = get_spark(app_name="volume-check", cores=32,
                       shuffle_partitions=64)
+    require_io_codec(spark)
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     rep = spark.range(DOC_REPS).select(F.col("id").alias("r"))
